@@ -1,6 +1,7 @@
 """Benchmark harness — runs the headline corpus at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}.
+(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default: the
+visible cores) and prints ONE JSON line:
+{"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}.
 
 Each query executes end-to-end into a noop sink (full computation, no
 driver-side materialization cost).  Protocol: one UNTIMED warm-up run
@@ -372,7 +373,7 @@ def main() -> None:
     sf = float(Path(sf_dir).name.replace("sf", "") or 0.1)
 
     from heparchy_spark.queries import spark_queries
-    from heparchy_spark.session import get_spark
+    from heparchy_spark.session import CPUS, get_spark
 
     prev_details = _previous_details()
     spark = get_spark("heparchy-spark-bench")
@@ -602,7 +603,7 @@ def main() -> None:
             # 8-core runs without the core count on the line; carry it
             # (additions-only) so regressions are adjudicable from the
             # printed JSON alone.  canary_median is already printed.
-            "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+            "cpus": CPUS,
             "sf": sf,
         }
     )

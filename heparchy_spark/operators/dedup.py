@@ -978,11 +978,8 @@ def simhash_near_dup_pairs(
 # int sz per prefix token): 34 MB cache / 5.8 MB parquet at the 10x
 # rehearsal scale, ~5.9x.  Deliberately rounded UP so the narrow
 # mis-estimate band near the broadcast flip lands on the partitioned
-# (scale-safe) side.  Corpus-shape dependent (doc length / threshold),
-# hence env-overridable for deployments whose corpora differ.
-_PPJOIN_PREF_EXPANSION = float(
-    os.environ.get("HEPARCHY_PPJOIN_PREF_EXPANSION", "6.0")
-)
+# (scale-safe) side.  Corpus-shape dependent (doc length / threshold).
+_PPJOIN_PREF_EXPANSION = 6.0
 
 # Corpus-size gate for the wide (2x32-bit + Hamming-ball probe) SimHash
 # banding: ~64 MB of document parquet ~ 550k docs at the measured
@@ -990,9 +987,7 @@ _PPJOIN_PREF_EXPANSION = float(
 # flip to the scale-safe wide construction happens early (a wrong
 # narrow choice is quadratic in n; a wrong wide choice costs a bounded
 # ~2x constant).  See simhash_near_dup_pairs for the derivation.
-_SIMHASH_WIDE_MIN_BYTES = int(
-    os.environ.get("HEPARCHY_SIMHASH_WIDE_MIN_BYTES", str(64 * 1024 * 1024))
-)
+_SIMHASH_WIDE_MIN_BYTES = 64 * 1024 * 1024
 
 
 def _source_bytes(df: DataFrame) -> int:

@@ -7,24 +7,5 @@ physical plan so tests and operators can ASSERT those properties instead of
 hoping — the 100 TB failure mode is a plan that silently stopped pruning.
 """
 
-from heparchy_spark.plans.inspect import (
-    executed_plan,
-    has_broadcast_join,
-    has_partition_filters,
-    physical_plan,
-    pushed_filters,
-    scan_columns,
-    shuffle_count,
-    wholestage_codegen_ids,
-)
-
-__all__ = [
-    "physical_plan",
-    "executed_plan",
-    "scan_columns",
-    "pushed_filters",
-    "has_partition_filters",
-    "has_broadcast_join",
-    "shuffle_count",
-    "wholestage_codegen_ids",
-]
+from heparchy_spark.plans.inspect import *  # noqa: F403
+from heparchy_spark.plans.inspect import __all__

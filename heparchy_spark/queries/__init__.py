@@ -65,9 +65,9 @@ class QuerySpec:
     spark: SparkBuilder
     oracle: str | None  # None -> driver records rows-only check
     doc: str = ""
-    # Plan-shape declarations read by tests/test_plans.py's corpus-wide
-    # scale-killer gate.  A query whose physical plan legitimately
-    # contains a BroadcastNestedLoopJoin (the scalar-subquery /
+    # Plan-shape declarations read by the scale-killer rules
+    # (tools/plan_gate.violations).  A query whose physical plan
+    # legitimately contains a BroadcastNestedLoopJoin (the scalar-subquery /
     # bounded-broadcast pattern) or a row-at-a-time Python UDF (the one
     # UDTF slow-path demo) must SAY so at registration time — the gate
     # reads these flags from the registry, so there is no hand list to

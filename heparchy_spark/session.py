@@ -9,6 +9,8 @@ chosen for the 1000-executor / 100 TB deployment this engine targets:
   ``mapInPandas`` ingest paths).
 - **UTC session timezone** so timestamp semantics are stable across clusters
   (and match the DuckDB oracle, which is timezone-naive).
+- Local core count: ``SPARK_GRAFT_CPUS`` if set, else the cores this
+  process may run on (read once, at import).
 - Shuffle partition count defaults to the local core count; at cluster scale
   AQE's ``advisoryPartitionSizeInBytes`` governs post-shuffle sizing, so the
   static number only needs to be "big enough to not bottleneck the map side".
@@ -20,9 +22,10 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "DEFAULT_SHUFFLE_PARTITIONS"]
+__all__ = ["get_spark", "CPUS", "DEFAULT_SHUFFLE_PARTITIONS"]
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+DEFAULT_SHUFFLE_PARTITIONS = CPUS
 
 
 def get_spark(
@@ -32,8 +35,7 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with the engine's standard config."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or f"local[{cpus}]"
+    master = master or f"local[{CPUS}]"
     shuffle_partitions = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
 
     builder = (

@@ -8,6 +8,7 @@ import datetime as dt
 import pyspark.sql.functions as F
 
 from heparchy_spark.operators.sweep import interval_concurrency, prefix_sum
+from heparchy_spark.plans import executed_plan, global_windows
 
 
 def test_prefix_sum_matches_serial(spark, rng):
@@ -66,19 +67,13 @@ def test_interval_concurrency_never_single_partition_window(spark):
         [(dt.datetime(2024, 1, 1), dt.datetime(2024, 1, 2))],
         "s timestamp, e timestamp",
     )
-    plan = (
-        interval_concurrency(df, "s", "e")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    # every unbounded Window must be over __b (bucketed, parallel) —
-    # except the one on the |buckets|-row offsets table, which shows up
-    # partitioned by nothing but reads a bounded aggregate
-    for line in plan.splitlines():
-        if "Window" in line and "partitionBy" not in line:
-            continue
-    sums = [ln for ln in plan.splitlines() if "Window " in ln]
+    out = interval_concurrency(df, "s", "e")
+    # every window is partitioned by __b (bucketed, parallel) except the
+    # one on the |buckets|-row offsets table: ordered by __b, partitioned
+    # by nothing, but reading a bounded aggregate
+    wins = global_windows(out)
+    assert len(wins) == 1 and wins[0].startswith("windowspecdefinition(__b#")
+    sums = [ln for ln in executed_plan(out).splitlines() if "Window " in ln]
     assert any("__b" in ln for ln in sums)
 
 

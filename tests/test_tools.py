@@ -1,18 +1,23 @@
-"""Pin the pre-commit tooling's selection logic (no Spark needed).
+"""Pin the pre-commit tooling: the plan gate's selection logic and its
+rules.
 
 ``tools/plan_gate.py --changed`` is the per-commit gate; rounds 5 and 7
 shipped red trees when per-commit checks were skipped, and the round-8
 advice found a silent hole in its file->query mapping: editing an
 operator module whose stem matches no query module (operators/psl.py,
-operators/similarity.py, ...) re-gated nothing.  These tests pin the
-transitive mapping without invoking Spark or real git state.
+operators/similarity.py, ...) re-gated nothing.  The ``--changed``
+tests pin the transitive mapping without invoking Spark or real git
+state; ``test_violations_rule_fires`` shows each rule can flag.
 """
 
 from __future__ import annotations
 
+import dataclasses
 import subprocess
 import sys
 from pathlib import Path
+
+import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
 
@@ -76,3 +81,24 @@ def test_registry_broadcast_declarations_are_nonempty_strings():
         and not s.expects_broadcast.strip()
     ]
     assert not bad, bad
+
+
+@pytest.mark.parametrize(
+    "name, change, want",
+    [
+        ("q1_pricing_summary", {}, []),
+        ("q1_pricing_summary", {"expects_global_window": "x"},
+         ["stale-global-window-declaration"]),
+        ("q1_pricing_summary", {"expects_broadcast": "x"},
+         ["stale-broadcast-declaration"]),
+        ("profile_benford_price", {"expects_global_window": None},
+         ["undeclared-global-window"]),
+    ],
+)
+def test_violations_rule_fires(spark, name, change, want):
+    from heparchy_spark.queries import REGISTRY, _load_all
+    from plan_gate import SF_DIR, violations
+
+    _load_all()
+    spec = dataclasses.replace(REGISTRY[name], **change)
+    assert violations(spec, spec.spark(spark, SF_DIR)) == want

@@ -71,7 +71,9 @@ RUNTIME_MATERIALIZED = {
 
 
 def fingerprint(df) -> dict[str, int]:
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    from heparchy_spark.plans import executed_plan
+
+    plan = executed_plan(df)
     return {k: plan.count(v) for k, v in MARKERS.items()}
 
 

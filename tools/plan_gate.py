@@ -3,8 +3,9 @@
 The corpus-wide scale-killer gate (``tests/test_plans.py::
 test_corpus_wide_no_scale_killers``) plans all ~270 queries and takes
 minutes — rounds 5 and 7 both shipped a red tree because it wasn't run
-before commit.  This tool applies the SAME rules (read from the registry,
-no separate allowlist) to just the queries you touched, in seconds:
+before commit.  This tool applies the SAME rules (``violations``, which
+that test calls too; declarations read from the registry, no separate
+allowlist) to just the queries you touched, in seconds:
 
     python tools/plan_gate.py agg_theil_inequality orders_rfm_segments
     python tools/plan_gate.py --changed     # queries in modules touched
@@ -12,20 +13,7 @@ no separate allowlist) to just the queries you touched, in seconds:
     python tools/plan_gate.py --all         # the full corpus gate
 
 Checks per query (planned at sf0.001 — plan shape, no execution of the
-final frame): no CartesianProduct; no BroadcastNestedLoopJoin unless
-``expects_bnlj=True`` was declared; no row-at-a-time Python UDF
-(BatchEvalPython) unless ``expects_row_udf=True``; no explicit
-ESCALATING join hint (``ResolvedHint`` in the ANALYZED plan with
-strategy broadcast / shuffle_replicate_nl — an explicit hint is
-honored at any size, AQE never demotes it, so a hint on an SF-scaling
-frame hard-fails above Spark's 8 GB broadcast cap) unless
-``expects_broadcast="why bounded"`` was declared; demotion hints
-(merge, shuffle_hash) are always allowed — they pin a spillable,
-AQE-skew-splittable shape, the defense AGAINST planner-misestimate
-broadcasts of Python-map-derived frames; no unpartitioned
-window (the single-task sort class) unless
-``expects_global_window="why bounded"`` was declared.  Stale
-declarations (a flag outliving its plan shape) fail too.
+final frame): see ``violations``, the single source of the rules.
 Exit code 0 = clean, 1 = offenders found.
 """
 
@@ -39,6 +27,63 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+def violations(spec, df) -> list[str]:
+    """The scale-killer rules a query's plan breaks, by rule name; ``[]``
+    when clean.  ``spec`` is the query's registry entry: its
+    ``expects_*`` declarations allow a shape, and a declaration whose
+    shape is gone (stale) fails too.
+
+    - ``cartesian``: any CartesianProduct.
+    - ``unexpected-BNLJ``: a BroadcastNestedLoopJoin without
+      ``expects_bnlj=True`` (the scalar-subquery / bounded-broadcast
+      pattern).
+    - ``row-python-udf``: a row-at-a-time Python UDF (BatchEvalPython)
+      without ``expects_row_udf=True``.
+    - ``undeclared-broadcast-hint``: an ESCALATING join hint
+      (``ResolvedHint`` in the ANALYZED plan with strategy broadcast /
+      shuffle_replicate_nl) without ``expects_broadcast="why bounded"``.
+      An explicit hint is honored at any size and AQE never demotes it,
+      so a hint on an SF-scaling frame hard-fails above Spark's 8 GB
+      broadcast cap.
+    - ``undeclared-global-window``: an unpartitioned window (the
+      single-task sort class) without ``expects_global_window="why
+      bounded"``.
+    - ``stale-broadcast-declaration`` /
+      ``stale-global-window-declaration``: a declaration outliving its
+      plan shape, which would let a future SF-scaling one slip in."""
+    from heparchy_spark.plans import (
+        analyzed_plan,
+        executed_plan,
+        global_windows,
+    )
+
+    plan = executed_plan(df)
+    probs = []
+    if "CartesianProduct" in plan:
+        probs.append("cartesian")
+    if "BroadcastNestedLoopJoin" in plan and not spec.expects_bnlj:
+        probs.append("unexpected-BNLJ")
+    if "BatchEvalPython" in plan and not spec.expects_row_udf:
+        probs.append("row-python-udf")
+    # merge/shuffle_hash hints are DEMOTIONS (never pin a growing frame
+    # in memory; SMJ/SHJ spill and AQE skew-splits them) and need no
+    # declaration — the defense AGAINST planner-misestimate broadcasts
+    # of Python-map-derived frames
+    escalating = set(
+        re.findall(r"ResolvedHint \(strategy=(\w+)", analyzed_plan(df))
+    ) - {"merge", "shuffle_hash"}
+    if escalating and spec.expects_broadcast is None:
+        probs.append("undeclared-broadcast-hint")
+    if not escalating and spec.expects_broadcast is not None:
+        probs.append("stale-broadcast-declaration")
+    global_win = bool(global_windows(df))
+    if global_win and spec.expects_global_window is None:
+        probs.append("undeclared-global-window")
+    if not global_win and spec.expects_global_window is not None:
+        probs.append("stale-global-window-declaration")
+    return probs
 
 
 def changed_query_names() -> list[str]:
@@ -142,44 +187,7 @@ def main() -> int:
     offenders = []
     for name in names:
         spec = REGISTRY[name]
-        qe = spec.spark(spark, SF_DIR)._jdf.queryExecution()
-        plan = qe.executedPlan().toString()
-        analyzed = qe.analyzed().toString()
-        probs = []
-        if "CartesianProduct" in plan:
-            probs.append("cartesian")
-        if "BroadcastNestedLoopJoin" in plan and not spec.expects_bnlj:
-            probs.append("unexpected-BNLJ")
-        if "BatchEvalPython" in plan and not spec.expects_row_udf:
-            probs.append("row-python-udf")
-        # classify hint strategies: merge/shuffle_hash are DEMOTIONS
-        # (never pin a growing frame in memory; SMJ/SHJ spill and AQE
-        # skew-splits them) and need no declaration — everything else
-        # (broadcast, shuffle_replicate_nl) escalates and does
-        escalating = set(
-            re.findall(r"ResolvedHint \(strategy=(\w+)", analyzed)
-        ) - {"merge", "shuffle_hash"}
-        if escalating and spec.expects_broadcast is None:
-            probs.append("undeclared-broadcast-hint")
-        if not escalating and spec.expects_broadcast:
-            # a declaration must not outlive its hint — a stale one
-            # would let a future SF-scaling hint slip in undeclared
-            probs.append("stale-broadcast-declaration")
-        # unpartitioned window: the spec's FIRST element is an order
-        # entry (attr ASC/DESC) or the frame itself — no partition
-        # cols.  A FAILURE unless declared bounded (r9 verdict #4):
-        # a global window funnels its whole frame through one task.
-        global_win = bool(
-            re.search(
-                r"windowspecdefinition\((?:\w+#\d+\w* (?:ASC|DESC)"
-                r"|specifiedwindowframe)",
-                plan,
-            )
-        )
-        if global_win and spec.expects_global_window is None:
-            probs.append("undeclared-global-window")
-        if not global_win and spec.expects_global_window:
-            probs.append("stale-global-window-declaration")
+        probs = violations(spec, spec.spark(spark, SF_DIR))
         status = "FAIL " + ",".join(probs) if probs else "ok"
         print(f"{name}: {status}")
         if probs:
